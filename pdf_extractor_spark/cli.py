@@ -132,8 +132,8 @@ def main(argv: list[str] | None = None,
     # Every written artifact honors --pages (reference semantics: the result
     # contains ONLY the requested pages — core/extractor.py:119-120).  The
     # page-filtered doc table is reassembled relationally from the filtered
-    # pages via the zero-shuffle doc_text_expr; without --pages the slim
-    # kernel path writes the full doc table directly.
+    # pages via the zero-shuffle doc_text_expr; without --pages the
+    # docs-only extraction writes the full doc table directly.
     from .plans.pipeline import doc_text_expr, extracted_docs, write_tables_csv
 
     pages_df = api.extract(df, pages=pages)

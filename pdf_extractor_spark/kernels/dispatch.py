@@ -114,18 +114,31 @@ def _gunzip_bounded(payload: bytes) -> bytes:
     """Bounded transparent gunzip of a \\x1f\\x8b\\x08 payload.  Real crawl
     tables carry occasional double-compressed bodies (a Content-Encoding
     survivor the WARC writer stored verbatim); treating them as 'raw'
-    would emit binary soup as content — silent wrong output.  Truncated
-    or oversized members raise ValueError (-> error side-channel)."""
+    would emit binary soup as content — silent wrong output.  Every member
+    of a multi-member body is decoded (gzip(1) semantics), all under the
+    one output cap.  Truncated or oversized members, and trailing bytes
+    that are not another member, raise ValueError (-> error side-channel)."""
     import zlib
 
-    d = zlib.decompressobj(wbits=31)
-    out = d.decompress(payload, _MAX_GUNZIP_BYTES)
-    if d.unconsumed_tail:
-        raise ValueError(
-            f"gzip member exceeds {_MAX_GUNZIP_BYTES} bytes decompressed")
-    if not d.eof:
-        raise ValueError("truncated gzip member")
-    return out
+    parts: list[bytes] = []
+    room = _MAX_GUNZIP_BYTES
+    while True:
+        d = zlib.decompressobj(wbits=31)
+        # room + 1: max_length=0 would mean unbounded, and one byte past
+        # the cap is how an oversized member shows
+        chunk = d.decompress(payload, room + 1)
+        room -= len(chunk)
+        if room < 0:
+            raise ValueError(
+                f"gzip body exceeds {_MAX_GUNZIP_BYTES} bytes decompressed")
+        if not d.eof:
+            raise ValueError("truncated gzip member")
+        parts.append(chunk)
+        payload = d.unused_data
+        if not payload:
+            return b"".join(parts)
+        if payload[:3] != b"\x1f\x8b\x08":
+            raise ValueError("trailing bytes after gzip member")
 
 
 def extract_document(payload: bytes) -> dict:
@@ -146,12 +159,18 @@ def extract_document(payload: bytes) -> dict:
                 "n_pages": 0, "pages": [], "metadata": {},
             }
     kind = sniff_kind(payload)
+    if kind == "pdf" and not payload.startswith(b"%PDF-"):
+        # glued preamble junk before the header: offsets in such files are
+        # relative to the header (sniff_kind docstring).  If that does not
+        # parse, the payload is text that merely mentions %PDF-.
+        r = _extract_kind(payload[payload.index(b"%PDF-"):], "pdf")
+        return r if r["status"] == "ok" else _extract_kind(payload, "raw")
+    return _extract_kind(payload, kind)
+
+
+def _extract_kind(payload: bytes, kind: str) -> dict:
     try:
         if kind == "pdf":
-            if not payload.startswith(b"%PDF-"):
-                # glued preamble junk before the header: offsets in such
-                # files are relative to the header (sniff_kind docstring)
-                payload = payload[payload.index(b"%PDF-"):]
             r = pdf.parse_pdf(payload)
             pages = [
                 _page(

@@ -1,38 +1,28 @@
-"""Vectorized extraction UDF (SURVEY.md OP-59/60/61/64/65 as one Arrow pass).
+"""Vectorized extraction (SURVEY.md OP-59/60/61/64/65 as one Arrow pass).
 
-One scalar pandas UDF over the binary payload column: each Arrow batch is
-processed in a single Python round-trip (no per-row Python at the Spark
-level, per BASELINE.json input_hint).  Replaces the reference's triple
-document parse (/root/reference/pdf_extractor/core/extractor.py:116,149,201)
-with a single kernel pass per document.
+The only way into the Python kernel: one ``mapInPandas`` generator runs
+``extract_document`` once per document (one Python round-trip per Arrow
+batch, no per-row Python at the Spark level — BASELINE.json input_hint)
+and emits FLAT doc-level columns.  Which public function is called decides
+whether the same pass also emits the nested ``pages`` tree.  Replaces the
+reference's triple document parse
+(/root/reference/pdf_extractor/core/extractor.py:116,149,201).
 """
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..kernels.dispatch import assemble_doc_text, extract_document
-from ..schema import DOC_SCHEMA, EXTRACTION_SCHEMA
+from ..schema import DOC_SCHEMA, PAGE_SCHEMA
 
-__all__ = ["extract_udf", "with_extraction", "extracted_docs_frame"]
-
-_FIELDS = [f.name for f in EXTRACTION_SCHEMA.fields]
+__all__ = ["extracted_docs", "extracted_docs_with_pages"]
 
 
-@pandas_udf(EXTRACTION_SCHEMA)
-def extract_udf(payload: pd.Series) -> pd.DataFrame:
-    """binary -> full extraction struct (kind/status/title/pages/metadata)."""
-    results = [extract_document(bytes(b) if b is not None else b"") for b in payload]
-    return pd.DataFrame({name: [r[name] for r in results] for name in _FIELDS})
-
-
-def _doc_row(payload: bytes) -> dict:
-    """Doc-level slim result: same kernels, but only scalars cross Arrow.
-    Serializing the full nested tree (thousands of block structs per big doc)
-    costs ~5x the kernel itself; the docs-table path never needs it."""
-    r = extract_document(payload)
+def _doc_row(r: dict) -> dict:
+    """Doc-level scalars of one kernel result (schema.DOC_SCHEMA)."""
     pages = r["pages"]
     return {
         "kind": r["kind"], "status": r["status"], "error": r["error"],
@@ -44,59 +34,54 @@ def _doc_row(payload: bytes) -> dict:
         "total_images": sum(len(p["images"]) for p in pages),
         "total_tables": sum(len(p["tables"]) for p in pages),
         "total_links": sum(len(p["links"]) for p in pages),
-        "metadata": r["metadata"],
+        # canonical form: the bytes never depend on map insertion order
+        "metadata_json": json.dumps(r["metadata"], sort_keys=True,
+                                    ensure_ascii=False, separators=(",", ":")),
     }
 
 
-# Names/types of the derived doc-level columns (schema.DOC_SCHEMA).
-_DOC_DERIVED = [(f.name, f.dataType.simpleString()) for f in DOC_SCHEMA.fields]
+def _extract(df, with_pages: bool):
+    """Input pages frame -> extracted frame via ONE mapInPandas pass.
 
-
-def extracted_docs_frame(df, payload_col: str = "html"):
-    """Input pages frame -> flat doc-level frame via ONE mapInPandas pass.
-
-    Flat columns, not a struct, and metadata as a deterministic JSON string:
-    measured on this box, the pandas_udf struct return costs ~4x and a
-    MapType column another ~3x over flat Arrow columns — at 100 TB that is
-    the difference between kernel-bound and serialization-bound.  All input
-    columns except the payload and the (empty) input ``text`` pass through.
+    Columns: the input columns except the ``html`` payload and the (empty)
+    input ``text``; then DOC_SCHEMA; then ``n_bytes`` (0 for a null payload);
+    then, only ``with_pages``, ``pages array<PAGE_SCHEMA>``.  Flat columns
+    and metadata as a JSON string because a struct return costs ~4x and a
+    MapType column another ~3x in Arrow conversion (measured on a 4-core
+    local box); the nested page tree (thousands of block structs per big
+    doc) costs ~5x the kernel itself, so docs-only callers never pay for it.
     """
-    import json
-
-    passthrough = [
-        f for f in df.schema.fields if f.name not in (payload_col, "text")
-    ]
+    pass_names = [n for n in df.columns if n not in ("html", "text")]
     out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in passthrough]
-        + [f"{n} {t}" for n, t in _DOC_DERIVED]
+        [f"{f.name} {f.dataType.simpleString()}"
+         for f in [*(df.schema[n] for n in pass_names), *DOC_SCHEMA.fields]]
         + ["n_bytes long"]
+        + ([f"pages array<{PAGE_SCHEMA.simpleString()}>"] if with_pages else [])
     )
-    pass_names = [f.name for f in passthrough]
 
     def run(batches):
         for pdf in batches:
-            payloads = [bytes(b) if b is not None else b"" for b in pdf[payload_col]]
-            rows = [_doc_row(b) for b in payloads]
+            payloads = [bytes(b) if b is not None else b"" for b in pdf["html"]]
+            results = [extract_document(b) for b in payloads]
+            rows = [_doc_row(r) for r in results]
             out = {n: pdf[n].reset_index(drop=True) for n in pass_names}
-            for name, _t in _DOC_DERIVED:
-                if name == "metadata_json":
-                    # Canonical form: sorted keys + compact separators ==
-                    # Spark to_json(map_from_entries(array_sort(...))) used
-                    # by the has_ext path — both paths byte-equal by test.
-                    out[name] = [
-                        json.dumps(r["metadata"], sort_keys=True,
-                                   ensure_ascii=False, separators=(",", ":"))
-                        for r in rows
-                    ]
-                else:
-                    out[name] = [r[name] for r in rows]
+            for f in DOC_SCHEMA.fields:
+                out[f.name] = [row[f.name] for row in rows]
             out["n_bytes"] = [len(b) for b in payloads]
+            if with_pages:
+                out["pages"] = [r["pages"] for r in results]
             yield pd.DataFrame(out)
 
     return df.mapInPandas(run, schema=out_schema)
 
 
-def with_extraction(df, payload_col: str = "html", out_col: str = "ext"):
-    """Attach the full extraction struct column; callers select/prune fields
-    so only needed data crosses later shuffles."""
-    return df.withColumn(out_col, extract_udf(F.col(payload_col)))
+def extracted_docs(df):
+    """Document-level output table, one row per input row: the per-doc
+    summary semantics of the reference (extraction_result.py:100-130) from
+    the kernel pass; nothing nested crosses Arrow."""
+    return _extract(df, with_pages=False)
+
+
+def extracted_docs_with_pages(df):
+    """The docs frame plus the ``pages`` tree, from the same kernel pass."""
+    return _extract(df, with_pages=True)

@@ -115,9 +115,9 @@ def ocr_word_boxes(pages: DataFrame, payload_col: str = "html",
 
 def ocr_word_boxes_from_extraction(ext: DataFrame, dpi: int = 72) -> DataFrame:
     """SHARED-PASS box derivation (round-3 item 7): read the word stream out
-    of an ALREADY-EXTRACTED frame (``with_extraction`` output, or the
-    persisted pages table at scale) instead of re-running the kernel over
-    the payloads — boxes become a pure JVM-side projection (flatten +
+    of an ALREADY-EXTRACTED frame (``extracted_docs_with_pages`` output, or
+    the persisted docs+pages frame at scale) instead of re-running the
+    kernel over the payloads — boxes become a pure JVM-side projection (flatten +
     posexplode + md5), so the OCR chain costs ZERO extra kernel passes.
 
     Matches ``ocr_word_boxes`` value-for-value: same content-word gate
@@ -129,7 +129,7 @@ def ocr_word_boxes_from_extraction(ext: DataFrame, dpi: int = 72) -> DataFrame:
     zoom = dpi / 72.0
     words = F.flatten(
         F.transform(
-            F.col("ext.pages"),
+            F.col("pages"),
             lambda p: F.flatten(
                 F.transform(
                     F.filter(
@@ -232,11 +232,11 @@ def q_ocr_lines(spark: SparkSession, sf: str) -> DataFrame:
     the shared extraction frame — the plan is kernel-parse once, then pure
     JVM flatten/explode/groupBy; at scale the same projection reads the
     persisted pages table with zero kernel work."""
-    from ..operators.extract import with_extraction
+    from ..operators.extract import extracted_docs_with_pages
     from .pipeline_queries import pages_from_documents
 
     pages = pages_from_documents(spark, sf)
-    ext = with_extraction(pages).select("doc_id", "ext")
+    ext = extracted_docs_with_pages(pages).select("doc_id", "pages")
     return ocr_lines(ocr_word_boxes_from_extraction(ext))
 
 

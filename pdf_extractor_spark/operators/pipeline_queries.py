@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import with_extraction
+from ..operators.extract import extracted_docs, extracted_docs_with_pages
 from .registry import T, fan_out, query
 
 # One-line template: no inter-tag whitespace => no stray whitespace-only
@@ -84,13 +84,10 @@ def q_extract_text(spark: SparkSession, sf: str) -> DataFrame:
     """Flagship kernel gate (OP-64/65 + OP-43b): full Arrow-UDF DOM
     extraction must reproduce, byte-identically, the SQL-stated expectation —
     heading + article body when the body clears MIN_CONTENT_WORDS, else
-    empty (heading demoted, kernels/dom.py _classify).  Uses the slim
-    doc-level kernel (flat mapInPandas, no nested structs over Arrow); its
-    text is proven equal to the full-struct doc_text_expr path in tests."""
-    from ..operators.extract import extracted_docs_frame
-
+    empty (heading demoted, kernels/dom.py _classify).  Docs-only
+    extraction: flat mapInPandas columns, no nested structs over Arrow."""
     pages = pages_from_documents(spark, sf)
-    return extracted_docs_frame(pages).select("doc_id", "title", "text")
+    return extracted_docs(pages).select("doc_id", "title", "text")
 
 
 @query(
@@ -106,8 +103,8 @@ def q_extract_links(spark: SparkSession, sf: str) -> DataFrame:
     extract_cam_followers.py:96-99): every wrapped page carries exactly the
     template's three hrefs, in document order."""
     pages = pages_from_documents(spark, sf)
-    ext = with_extraction(pages)
-    links = F.col("ext.pages")[0]["links"]
+    ext = extracted_docs_with_pages(pages)
+    links = F.col("pages")[0]["links"]
     return ext.select(
         "doc_id",
         F.size(links).cast("long").alias("n_links"),
@@ -130,8 +127,8 @@ def q_extract_blocks(spark: SparkSession, sf: str) -> DataFrame:
     """Block classification counts (OP-34/64): title + nav + h1 + p + footer
     blocks; exactly {h1, p} classified content when the body has >=8 words."""
     pages = pages_from_documents(spark, sf)
-    ext = with_extraction(pages)
-    blocks = F.col("ext.pages")[0]["blocks"]
+    ext = extracted_docs_with_pages(pages)
+    blocks = F.col("pages")[0]["blocks"]
     return ext.select(
         "doc_id",
         F.size(blocks).cast("long").alias("n_blocks"),
@@ -169,11 +166,8 @@ def q_pipeline_kinds(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.pages import corpus_df
 
     pages = corpus_df(spark, 300, parts=8)
-    ext = with_extraction(pages)
     return (
-        ext.select(F.col("ext.kind").alias("kind"),
-                   F.col("ext.status").alias("status"),
-                   F.col("ext.n_pages").alias("n_pages"))
+        extracted_docs(pages)
         .groupBy("kind", "status")
         .agg(F.count(F.lit(1)).alias("n_docs"),
              F.sum("n_pages").cast("long").alias("total_pages"))
@@ -1015,11 +1009,11 @@ _N_GZIP_DOCS = 60
 
 @query(
     "q_gzip_transparent",
-    # Structural (non-circular) oracle: extracting a payload and
-    # extracting its gzip-wrapped bytes (mtime=0) must produce the
-    # IDENTICAL full result tree — same kind, status, pages, text,
-    # blocks, images — across all three payload kinds and both PDF
-    # dialects.  n_kind_ok additionally proves the reported kind is the
+    # Structural (non-circular) oracle: extracting a payload, its
+    # gzip-wrapped bytes (mtime=0) and its two halves as a two-member gzip
+    # body must produce the IDENTICAL full result tree — same kind,
+    # status, pages, text, blocks, images — across all three payload kinds
+    # and both PDF dialects.  n_kind_ok additionally proves the reported kind is the
     # INNER kind (a 'raw' leak would mean binary soup shipped as text).
     f"""
     SELECT CAST({_N_GZIP_DOCS} AS BIGINT) AS n_docs,
@@ -1031,10 +1025,11 @@ def q_gzip_transparent(spark: SparkSession, sf: str) -> DataFrame:
     """Transparent-gunzip gate (real crawl tables carry double-compressed
     bodies — Content-Encoding survivors stored verbatim; treating them as
     raw text would emit binary soup as content, silent wrong output):
-    extract 60 payloads (pdf/html/raw thirds, both PDF dialects) plain
-    AND gzip-wrapped, and require full result-tree equality plus
-    inner-kind correctness per document (kernels/dispatch.py
-    _gunzip_bounded, 64 MiB bomb cap, <=3 nested members)."""
+    extract 60 payloads (pdf/html/raw thirds, both PDF dialects) plain,
+    gzip-wrapped AND split over two gzip members, and require full
+    result-tree equality plus inner-kind correctness per document
+    (kernels/dispatch.py _gunzip_bounded, 64 MiB bomb cap, <=3 nested
+    members)."""
     import gzip as _gzip
     import random as _random
     from collections.abc import Iterator
@@ -1059,9 +1054,12 @@ def q_gzip_transparent(spark: SparkSession, sf: str) -> DataFrame:
                     payload = make_html(rng, doc_id, "en")
                 else:
                     payload = make_raw(rng, doc_id)
+                k = len(payload) // 2
                 rp = extract_document(payload)
                 rg = extract_document(_gzip.compress(payload, 6, mtime=0))
-                match.append(1 if rp == rg else 0)
+                rs = extract_document(_gzip.compress(payload[:k], 6, mtime=0)
+                                      + _gzip.compress(payload[k:], 6, mtime=0))
+                match.append(1 if rp == rg == rs else 0)
                 kind_ok.append(
                     1 if rg["kind"] == kind and rg["status"] == "ok"
                     else 0)

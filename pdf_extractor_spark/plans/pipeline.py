@@ -10,12 +10,10 @@ Dataflow::
       -> url-hash repartition (urls are unique -> row-count uniform; the
          *compute* skew lives in payload size, handled above; host-level
          value skew is handled by salted aggregation in operators/relational)
-      -> ONE vectorized kernel pass (operators/extract.extract_udf)
-      -> doc assembly WITHOUT a shuffle: ordered text reassembly (OP-43b)
-         runs as array_sort + transform + concat_ws higher-order functions
-         over the pages array already resident in the row — the relational
-         groupBy formulation exists as operators.relational.ordered_concat
-         and is proven equal in tests
+      -> ONE vectorized kernel pass (operators/extract: a mapInPandas
+         generator emitting flat doc columns — text assembled and totals
+         summed in the same pass — plus the ``pages`` tree only when the
+         pages table is written)
       -> per-bucket parquet write + checkpoint manifest row with lineage +
          doc/byte counters (Observation API)                      (§4.3.3)
 
@@ -36,7 +34,7 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import with_extraction
+from ..operators.extract import extracted_docs, extracted_docs_with_pages
 
 __all__ = [
     "doc_text_expr",
@@ -55,7 +53,8 @@ OVERSIZE_THRESHOLD = 256 * 1024  # bytes; docs above this are routed separately
 
 
 def doc_text_expr(pages: Column, kind: Column) -> Column:
-    """Ordered text reassembly (OP-43b) with ZERO shuffle.
+    """Ordered text reassembly (OP-43b) with ZERO shuffle, over a
+    (page_number, text) struct array — the CLI's ``--pages`` doc table.
 
     ``array_sort`` orders the pages struct array by its leading field
     ``page_number`` (explicit sort key — never row order), then PDFs get the
@@ -70,10 +69,6 @@ def doc_text_expr(pages: Column, kind: Column) -> Column:
     return F.when(kind == "pdf", F.concat_ws("\n\n", banner)).otherwise(
         F.coalesce(F.element_at(sorted_pages, 1)["text"], F.lit(""))
     )
-
-
-def _sum_field(pages: Column, fn) -> Column:
-    return F.aggregate(pages, F.lit(0), lambda acc, p: acc + F.coalesce(fn(p), F.lit(0)))
 
 
 def route_oversized(df: DataFrame, parts: int,
@@ -95,62 +90,13 @@ def route_oversized(df: DataFrame, parts: int,
     return df.repartition(parts, bucket)
 
 
-def extracted_docs(df: DataFrame, has_ext: bool = False) -> DataFrame:
-    """Document-level output table: one row per url.
-
-    Standalone (has_ext=False): uses the slim doc-level kernel
-    (extract_doc_udf) — no nested structs cross the Arrow boundary, ~5x
-    cheaper on block-heavy documents.  Shared-pass mode (has_ext=True, used
-    when the pages table is written from the same kernel pass): totals come
-    from higher-order aggregates over the pages array — the per-doc summary
-    semantics of the reference (extraction_result.py:100-130) without any
-    shuffle.  Both paths are proven byte/value-equal in tests."""
-    if not has_ext:
-        from ..operators.extract import extracted_docs_frame
-
-        return extracted_docs_frame(df)
-    ext = df  # expects columns: url, warc_ts, lang, ext, n_bytes
-    pages = F.col("ext.pages")
+def _explode_pages(ext: DataFrame) -> DataFrame:
+    """Docs+pages frame -> page-level long table, one row per page (an
+    error doc keeps one all-null page row)."""
     return ext.select(
         "url",
-        "warc_ts",
-        "lang",
-        F.col("ext.kind").alias("kind"),
-        F.col("ext.status").alias("status"),
-        F.col("ext.error").alias("error"),
-        F.col("ext.title").alias("title"),
-        F.col("ext.n_pages").alias("n_pages"),
-        doc_text_expr(pages, F.col("ext.kind")).alias("text"),
-        _sum_field(pages, lambda p: p["char_count"]).cast("long").alias("total_chars"),
-        _sum_field(pages, lambda p: p["word_count"]).cast("long").alias("total_words"),
-        _sum_field(pages, lambda p: F.size(p["blocks"])).cast("long")
-        .alias("total_text_blocks"),
-        _sum_field(pages, lambda p: F.size(p["images"])).cast("long")
-        .alias("total_images"),
-        _sum_field(pages, lambda p: F.size(p["tables"])).cast("long")
-        .alias("total_tables"),
-        _sum_field(pages, lambda p: F.size(p["links"])).cast("long")
-        .alias("total_links"),
-        # Canonical metadata JSON: entries sorted by key, compact separators —
-        # byte-equal to the slim path's json.dumps(sort_keys=True,
-        # separators=(",", ":")) regardless of map insertion order.  Column
-        # order (metadata_json before n_bytes) also matches the slim path so
-        # the docs table bytes don't depend on write_pages_table mode.
-        F.to_json(
-            F.map_from_entries(F.array_sort(F.map_entries(F.col("ext.metadata"))))
-        ).alias("metadata_json"),
-        F.col("n_bytes"),
-    )
-
-
-def extracted_pages(df: DataFrame, has_ext: bool = False) -> DataFrame:
-    """Page-level long-format table (OP-33 doc->pages explode): the
-    relational workhorse for downstream block/image/table queries."""
-    ext = df if has_ext else with_extraction(df)
-    return ext.select(
-        "url",
-        F.col("ext.kind").alias("kind"),
-        F.posexplode_outer("ext.pages").alias("pos", "page"),
+        "kind",
+        F.posexplode_outer("pages").alias("pos", "page"),
     ).select(
         "url",
         "kind",
@@ -165,9 +111,14 @@ def extracted_pages(df: DataFrame, has_ext: bool = False) -> DataFrame:
     )
 
 
+def extracted_pages(df: DataFrame) -> DataFrame:
+    """Page-level long-format table (OP-33 doc->pages explode): the
+    relational workhorse for downstream block/image/table queries."""
+    return _explode_pages(extracted_docs_with_pages(df))
+
+
 def extracted_images(
     df: DataFrame,
-    has_ext: bool = False,
     min_width: int = 50,
     min_height: int = 50,
 ) -> DataFrame:
@@ -178,7 +129,7 @@ def extracted_images(
     image_extractor.py:124-128, defaults 50x50) runs RELATIONALLY and before
     any downstream payload work — the filter-before-expensive-projection
     ordering the reference hand-codes."""
-    pages = extracted_pages(df, has_ext=has_ext)
+    pages = extracted_pages(df)
     imgs = pages.select(
         "url", "page_number", F.explode("images").alias("img")
     ).select(
@@ -202,13 +153,13 @@ def extracted_images(
     )
 
 
-def extracted_tables(df: DataFrame, has_ext: bool = False) -> DataFrame:
+def extracted_tables(df: DataFrame) -> DataFrame:
     """Table long table (OP-36/61; ref table_extractor.py:42-135): one row
     per detected table with the reference's cell cleaning applied
     relationally — null->'' coalesce (OP-15, :123-124), whitespace collapse
     (OP-14, :127-129), all-empty-row drop (OP-28, :131-133), all-empty-table
     drop (:68-69) — plus the ragged-shape stats (OP-45)."""
-    pages = extracted_pages(df, has_ext=has_ext)
+    pages = extracted_pages(df)
     t = pages.select(
         "url", "page_number", F.posexplode("tables").alias("table_index", "data")
     )
@@ -309,18 +260,13 @@ def run_extraction(
         routed = route_oversized(part, parts)
         obs = Observation(f"bucket_{b}")
         if write_pages_table:
-            # one kernel pass feeds both sinks: persist the extraction
-            # (payload column dropped — the reference re-parses per concern,
-            # /root/reference/.../core/extractor.py:116,149,201; we don't)
-            ext = (
-                with_extraction(routed)
-                .withColumn("n_bytes", F.length("html").cast("long"))
-                .drop("html")
-                .persist()
-            )
-            docs = extracted_docs(ext, has_ext=True)
+            # one kernel pass feeds both sinks: persist the docs+pages frame
+            # (payload already dropped by the generator — the reference
+            # re-parses per concern, /root/reference/.../core/extractor.py:
+            # 116,149,201; we don't)
+            ext = extracted_docs_with_pages(routed).persist()
+            docs = ext.drop("pages")
         else:
-            # docs-only run: slim kernel path, nothing nested crosses Arrow
             ext = None
             docs = extracted_docs(routed)
         docs = docs.observe(
@@ -330,7 +276,7 @@ def run_extraction(
         )
         docs.write.mode("overwrite").parquet(f"{out_dir}/docs/bucket={b}")
         if write_pages_table:
-            extracted_pages(ext, has_ext=True).write.mode("overwrite").parquet(
+            _explode_pages(ext).write.mode("overwrite").parquet(
                 f"{out_dir}/pages/bucket={b}"
             )
             ext.unpersist()

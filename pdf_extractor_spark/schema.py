@@ -69,8 +69,11 @@ PAGE_SCHEMA = T.StructType([
     T.StructField("links", T.ArrayType(T.StringType()), True),
 ])
 
-# ExtractionResult analogue (extraction_result.py:108-141); timestamps are
-# derived relationally (OP-21), never inside the kernel.
+# ExtractionResult analogue (extraction_result.py:108-141): one
+# extract_document result as a single struct.  The pipeline emits it flat
+# (DOC_SCHEMA + pages); perfbench/layers.py times a struct return of this
+# shape as the cost reference for the boundary.  Timestamps are derived
+# relationally (OP-21), never inside the kernel.
 EXTRACTION_SCHEMA = T.StructType([
     T.StructField("kind", T.StringType(), False),
     T.StructField("status", T.StringType(), False),
@@ -82,12 +85,14 @@ EXTRACTION_SCHEMA = T.StructType([
 ])
 
 # Doc-level derived columns (per-concern kernel split, SURVEY.md §4.1):
-# Catalyst cannot prune fields INSIDE a UDF result, so the docs-table path
-# gets its own slim kernel output — no block structs, no image payloads ever
-# cross the Arrow boundary.  Emitted as FLAT columns via mapInPandas (struct
-# returns and MapType columns each cost severalfold in Arrow conversion);
-# ``text`` is the assembled doc text (dispatch.assemble_doc_text — the
-# goldens oracle); metadata rides as a deterministic JSON string.
+# Catalyst cannot prune fields INSIDE a UDF result, so the one extraction
+# generator (operators/extract.py) emits these as FLAT columns via
+# mapInPandas and adds the nested ``pages array<PAGE_SCHEMA>`` only when the
+# caller needs pages — no block structs or image payloads cross the Arrow
+# boundary otherwise (struct returns and MapType columns each cost
+# severalfold in Arrow conversion).  ``text`` is the assembled doc text
+# (dispatch.assemble_doc_text — the goldens oracle); metadata rides as a
+# deterministic JSON string.
 DOC_SCHEMA = T.StructType([
     T.StructField("kind", T.StringType(), False),
     T.StructField("status", T.StringType(), False),

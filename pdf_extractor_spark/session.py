@@ -8,6 +8,7 @@ oracle-comparison and scaling runs share identical semantics:
 - Arrow batch size bounded so a batch of binary payloads cannot blow
   executor memory (SURVEY.md §4.3.2)
 - shuffle partitions sized to cores (local mode), not the 200 default
+- driver heap sized to the machine's RAM (``driver_memory``)
 """
 
 from __future__ import annotations
@@ -19,12 +20,27 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "package_zip", "ARROW_BATCH_ROWS"]
+__all__ = ["get_spark", "package_zip", "driver_memory", "ARROW_BATCH_ROWS"]
 
 # Rows per Arrow batch crossing the JVM->Python boundary.  With ~4 KiB median
 # payloads this is ~1 MiB/batch; oversized docs are additionally routed to
 # low-fanout partitions by the pipeline (plans/pipeline.py).
 ARROW_BATCH_ROWS = 256
+
+
+def driver_memory(meminfo: str | None = None) -> str:
+    """``spark.driver.memory``: ``$SPARK_DRIVER_MEM``, else 40% of MemTotal
+    (``meminfo`` = /proc/meminfo text) clamped to [1 GiB, 32 GiB].  In local
+    mode the driver JVM holds every executor, and its RSS runs well past
+    the heap (metaspace, Arrow buffers) next to the Python workers."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    if meminfo is None:
+        proc = Path("/proc/meminfo")
+        meminfo = proc.read_text() if proc.exists() else ""
+    kb = next((int(ln.split()[1]) for ln in meminfo.splitlines()
+               if ln.startswith("MemTotal:")), 0)
+    return f"{min(32 * 1024, max(1024, int(kb / 1024 * 0.4)))}m"
 
 
 def get_spark(
@@ -48,7 +64,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )

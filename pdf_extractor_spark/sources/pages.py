@@ -54,8 +54,12 @@ def corpus_df(
 
 
 def iceberg_available(spark: SparkSession) -> bool:
+    """Loads an Iceberg class through the context classloader: attribute
+    access on ``spark._jvm`` answers any unknown name with a JavaPackage."""
+    jvm = spark._jvm  # noqa: SLF001 - capability probe
     try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: SLF001 - capability probe
+        loader = jvm.java.lang.Thread.currentThread().getContextClassLoader()
+        jvm.java.lang.Class.forName("org.apache.iceberg.Table", False, loader)
         return True
     except Exception:
         return False

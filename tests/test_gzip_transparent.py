@@ -34,6 +34,30 @@ class TestTransparentGunzip:
             rg = extract_document(gzip.compress(payload, 6, mtime=0))
             assert rp == rg
             assert rg["kind"] == kind and rg["status"] == "ok"
+            # a multi-member body (gzip(1) concatenation) decodes every
+            # member: gzip(p[:k]) + gzip(p[k:]) gives the tree of p itself
+            for k in (1, len(payload) // 3, len(payload) - 1):
+                split = (gzip.compress(payload[:k], 6, mtime=0)
+                         + gzip.compress(payload[k:], 6, mtime=0))
+                assert extract_document(split) == rp
+
+    def test_split_text_not_truncated(self):
+        r = extract_document(gzip.compress(b"hello world one", mtime=0)
+                             + gzip.compress(b" and two", mtime=0))
+        assert r["status"] == "ok"
+        assert r["pages"][0]["text"] == "hello world one and two"
+
+    def test_trailing_non_member_error_routes(self):
+        body = gzip.compress(b"hello world one", mtime=0)
+        for tail in (b"junk", b"\x00" * 8, b"\x1f\x8b"):
+            r = extract_document(body + tail)
+            assert r["status"] == "error" and "gzip" in r["error"]
+
+    def test_members_share_one_cap(self):
+        # two members, each under the cap, together over it
+        half = gzip.compress(b"\x00" * (40 << 20), 1)
+        r = extract_document(half + half)
+        assert r["status"] == "error" and "exceeds" in r["error"]
 
     def test_nested_members_unwrap(self):
         html = (b'<html><body><article><h1>T</h1><p>nested body with '
@@ -91,6 +115,17 @@ class TestPdfPreamble:
                 b'%PDF- magic header with plenty of words in this body'
                 b'</p></article></body></html>')
         assert extract_document(html)["kind"] == "html"
+
+    def test_text_mentioning_pdf_magic_is_raw(self):
+        # scanned header that does not parse: the payload is plain text
+        text = b"Notes on formats: a %PDF-1.4 header opens each file.\n" * 3
+        r = extract_document(text)
+        assert r["kind"] == "raw" and r["status"] == "ok"
+        assert r["pages"][0]["text"].startswith("Notes on formats: a %PDF-1.4")
+
+    def test_header_at_byte_zero_still_error_routes(self):
+        r = extract_document(b"%PDF-1.4\nplain words, no objects at all\n")
+        assert r["kind"] == "pdf" and r["status"] == "error"
 
     def test_deep_magic_not_sniffed(self):
         # the scan window is 1 KiB: %PDF- beyond it stays raw

@@ -82,7 +82,7 @@ def test_shared_pass_boxes_equal_kernel_boxes(spark):
     """The relational (shared-extraction-pass) box projection must produce
     exactly the kernel path's boxes — order aside (the kernel scrambles;
     the chain's (y, x) sort owns ordering)."""
-    from pdf_extractor_spark.operators.extract import with_extraction
+    from pdf_extractor_spark.operators.extract import extracted_docs_with_pages
     from pdf_extractor_spark.operators.ocr import (
         ocr_word_boxes_from_extraction,
     )
@@ -93,13 +93,13 @@ def test_shared_pass_boxes_equal_kernel_boxes(spark):
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
     kern = ocr_word_boxes(pages).collect()
     rel = ocr_word_boxes_from_extraction(
-        with_extraction(pages).select("doc_id", "ext")
+        extracted_docs_with_pages(pages).select("doc_id", "pages")
     ).collect()
     key = lambda r: (r["doc_id"], r["y0"], r["x0"], r["w"], r["conf"])
     assert sorted(map(key, kern)) == sorted(map(key, rel))
     # dpi zoom scales coordinates identically on both paths
     kern2 = ocr_word_boxes(pages, dpi=144).collect()
     rel2 = ocr_word_boxes_from_extraction(
-        with_extraction(pages).select("doc_id", "ext"), dpi=144
+        extracted_docs_with_pages(pages).select("doc_id", "pages"), dpi=144
     ).collect()
     assert sorted(map(key, kern2)) == sorted(map(key, rel2))

@@ -14,6 +14,7 @@ from pdf_extractor_spark.plans.pipeline import (
     extracted_docs,
     extracted_pages,
     route_oversized,
+    run_extraction,
 )
 from pdf_extractor_spark.schema import PAGES_INPUT_SCHEMA
 from tests.gen_fixtures import GOLDEN_DIR, doc_key, fixture_rows
@@ -103,26 +104,29 @@ def test_parallelism_invariance(spark, fixture_df):
            {(r["url"], r["text"]) for r in b.collect()}
 
 
-def test_slim_equals_shared_pass(spark, fixture_df):
-    """Per-concern kernel split (schema.DOC_SCHEMA): the slim doc-level UDF
-    must be value-identical to the full-struct path's relational assembly
-    on every output column."""
-    from pdf_extractor_spark.operators.extract import with_extraction
+def test_docs_table_independent_of_pages_mode(spark, fixture_df, tmp_path):
+    """run_extraction writes the same docs table whether or not it also
+    writes the pages table: same columns in the same order, same types,
+    same values — including a null payload (n_bytes 0, never NULL)."""
+    import pyarrow.parquet as pq
 
-    slim = extracted_docs(fixture_df)
-    shared = extracted_docs(
-        with_extraction(fixture_df)
-        .withColumn("n_bytes", F.length("html").cast("long"))
-        .drop("html"),
-        has_ext=True,
+    null_row = spark.createDataFrame(
+        pd.DataFrame([{"url": "https://x/null", "warc_ts": None, "html": None,
+                       "text": "", "lang": "en"}]),
+        schema=PAGES_INPUT_SCHEMA,
     )
-    # Column ORDER and every value — including the canonical metadata_json —
-    # must match, so docs-table bytes don't depend on write_pages_table mode.
-    assert slim.columns == shared.columns
-    cols = slim.columns
-    a = {tuple(r[c] for c in cols) for r in slim.collect()}
-    b = {tuple(r[c] for c in cols) for r in shared.collect()}
-    assert a == b
+    src = fixture_df.unionByName(null_row)
+    tables = {}
+    for with_pages in (True, False):
+        out = str(tmp_path / f"pages_{with_pages}")
+        run_extraction(spark, src, out, n_buckets=2, resume=False,
+                       write_pages_table=with_pages, run_id="eq")
+        tables[with_pages] = pq.read_table(f"{out}/docs").sort_by("url")
+    a, b = tables[True], tables[False]
+    assert a.schema == b.schema
+    assert a.equals(b)
+    by_url = {r["url"]: r for r in a.to_pylist()}
+    assert by_url["https://x/null"]["n_bytes"] == 0
 
 
 def test_corrupt_payloads_surface_as_error_rows(spark):
